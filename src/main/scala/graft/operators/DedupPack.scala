@@ -963,7 +963,7 @@ object DedupPack extends QueryPack {
     * ds_cdc_apply: (doc_id, chunk, n_toks, text, h) with chunk text
     * assembled in POSITION order via the sort_array(struct) idiom —
     * collect_list alone would hash partition-arrival order. */
-  def cdcChunked(tokens: DataFrame, rowsHint: Option[Long] = None): DataFrame = {
+  def cdcChunked(tokens: DataFrame): DataFrame = {
     // The running-sum window needs hash(doc_id) partitioning anyway —
     // supply it with an EXPLICIT count-derived width instead of the
     // session default: AQE coalesced the few-MB token exchange down to
@@ -975,13 +975,10 @@ object DedupPack extends QueryPack {
     // whole build was measured first: one exchange fewer, but the
     // interpreted per-token lambda tripled task CPU — 15.7 vs 5.8
     // task-seconds at sf0.1 — for flat wall; rejected, guide §4.)
-    // The sizing count is a full pass over the token chain — callers
-    // that know their doc count (or any upper bound) pass it via
-    // `rowsHint` so repeated/public invocations don't pay a corpus
-    // scan just to pick a width; the memoized artifact path pays the
-    // count once per corpus.
+    // The sizing count is a full pass over the token chain; the
+    // memoized artifact path pays it once per corpus.
     val p = math.min(
-      rowsHint.getOrElse(tokens.count()) / CdcDocsPerTask + 1,
+      tokens.count() / CdcDocsPerTask + 1,
       math.max(1, tokens.sparkSession.sparkContext.defaultParallelism)
         .toLong).toInt
     val tok = tokens.select(col("doc_id"),

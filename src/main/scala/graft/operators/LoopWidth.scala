@@ -47,7 +47,20 @@ object LoopWidth {
     // every production/bench path — this is the measured 250 k
     // constant (r15 swept 100 k: task CPU ×2, wall flat; r16 re-swept
     // under the fused rounds, numbers in OPTIMIZATION_r16.md).
-    sys.env.get("GRAFT_LOOP_ROWS_PER_TASK").map(_.toLong).getOrElse(250000L)
+    rowsPerTask(sys.env.get("GRAFT_LOOP_ROWS_PER_TASK"))
+
+  /** The knob's parse: a malformed or non-positive value falls back to
+    * the 250 k default with a warning — thrown at object init, it
+    * would surface as an opaque ExceptionInInitializerError on the
+    * first loop. */
+  private[operators] def rowsPerTask(env: Option[String]): Long =
+    env.flatMap { raw =>
+      val n = raw.trim.toLongOption.filter(_ > 0)
+      if (n.isEmpty) System.err.println(
+        s"LoopWidth: ignoring GRAFT_LOOP_ROWS_PER_TASK='$raw' " +
+          "(not a positive integer); using 250000")
+      n
+    }.getOrElse(250000L)
 
   def partitionsFor(rows: Long, spark: SparkSession): Int =
     math.min(

@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.operators.Merge
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
 
 /** The reference's single sink contract — a keyed idempotent upsert
   * (`UpdateOne(filter, $set, upsert: true)` per document,
@@ -160,9 +163,31 @@ class ParquetDocStoreSink(storePath: String, keys: Seq[String],
 
   private def versionDirs: Seq[Long] = versionStatuses.map(_._1)
 
+  /** Schema of every committed version this instance has read or
+    * written. A committed `v=<n>` never changes (a replay stops at
+    * [[alreadyApplied]], [[retire]] only deletes), so its schema is
+    * resolved once: without it every read re-runs Parquet schema
+    * inference, a one-task Spark job per lookup and per trigger.
+    * Holds only `StructType`s — nothing tied to a SparkContext. */
+  private[streaming] val schemas = new java.util.concurrent.ConcurrentHashMap[Long, StructType]()
+
+  /** The one read path for a committed version: by the memoized
+    * schema on a hit; on a miss (a fresh process, or a version another
+    * instance wrote) infer once and remember it. */
+  private def readVersion(spark: SparkSession, v: Long): DataFrame = {
+    val path = s"$storePath/v=$v"
+    Option(schemas.get(v)) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(v, df.schema)
+        df
+    }
+  }
+
   /** The materialized latest-per-key table (None before any batch). */
-  def current(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
-    versionDirs.maxOption.map(v => spark.read.parquet(s"$storePath/v=$v"))
+  def current(spark: SparkSession): Option[DataFrame] =
+    versionDirs.maxOption.map(readVersion(spark, _))
 
   override def alreadyApplied(batchId: Long): Boolean =
     versionDirs.contains(batchId)
@@ -177,16 +202,25 @@ class ParquetDocStoreSink(storePath: String, keys: Seq[String],
     // idle poll: an EMPTY fresh batch merges nothing — rotating a new
     // snapshot would rewrite the entire store per empty trigger (most
     // triggers, at the reference's 8 h polling cadence)
+    //
+    // `isEmpty` stays its own action. Inside foreachBatch the batch is
+    // a LogicalRDD over the micro-batch RDD, so the check reuses the
+    // fetch/parse shuffle map output and re-runs only the stateful
+    // dedup stage, under a LocalLimit. Persisting `latest` to
+    // evaluate the batch once measured neutral to slightly worse on
+    // the backfill benchmark.
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(orderCols.map(col(_).desc): _*)
     val latest = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val base = versionDirs.filter(_ < batchId).maxOption
-      .map(v => spark.read.parquet(s"$storePath/v=$v"))
+    val base = versionDirs.filter(_ < batchId).maxOption.map(readVersion(spark, _))
     val merged = base.fold(latest)(Merge.upsertReplace(_, latest, keys))
     merged.write.mode(SaveMode.Overwrite).parquet(s"$storePath/v=$batchId")
+    // the written schema reads back as inference would: Spark reads
+    // every file-source column, given or inferred, as nullable
+    schemas.put(batchId, merged.schema)
     retire()
   }
 
@@ -198,9 +232,14 @@ class ParquetDocStoreSink(storePath: String, keys: Seq[String],
     * reader-holding-a-just-retired-snapshot race. */
   private def retire(): Unit = {
     val now = System.currentTimeMillis()
-    versionStatuses.sortBy(-_._1).drop(keepVersions)
+    val committed = versionStatuses
+    val retired = committed.sortBy(-_._1).drop(keepVersions)
       .filter { case (_, committedAt) => now - committedAt >= retentionLagMs }
-      .foreach { case (v, _) => SinkFs.deleteRecursively(s"$storePath/v=$v") }
+      .map(_._1)
+    retired.foreach(v => SinkFs.deleteRecursively(s"$storePath/v=$v"))
+    // forget the retired versions and any another writer removed
+    schemas.keySet.retainAll(
+      (committed.map(_._1).toSet -- retired).map(Long.box).asJava)
   }
 }
 

@@ -4,7 +4,10 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import scala.jdk.CollectionConverters._
 
 /** The pluggable keyed-sink contract: whole-row upsert semantics,
   * replay idempotency, and the ingest stream routing through an
@@ -15,6 +18,38 @@ class KeyedSinkSpec extends SparkSpec {
   implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Run `body` and return it with the properties of every Spark job
+    * it launched from this thread (tagged by a unique job group). A
+    * marker job run afterwards is the barrier: the listener bus
+    * delivers in order, so once the marker's start arrives every
+    * earlier job start has too. */
+  private def jobsDuring[T](body: => T): (T, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    val group = "keyed-sink-" + java.util.UUID.randomUUID()
+    val marker = group + "-marker"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach { p =>
+            if (p.getProperty("spark.job.description") == marker) markerSeen.countDown()
+            else jobs.add(p)
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "", interruptOnCancel = false)
+      val out = try body finally sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("ParquetDocStoreSink maintains latest-per-key across batches; replay is idempotent") {
     val dir = Files.createTempDirectory("graft-docstore").toString
@@ -136,6 +171,83 @@ class KeyedSinkSpec extends SparkSpec {
     assert(sink.current(spark).get.as[(String, Long, String)].collect().toSet
       == Set(("a", 1L, "x1"), ("b", 1L, "y1")),
       "empty replay on a URI-addressed store erased committed rows")
+  }
+
+  /** Schema inference is the one job a read launches outside any SQL
+    * execution (the query's own jobs all carry an execution id). */
+  private def inferenceJobs(jobs: Seq[java.util.Properties]): Int =
+    jobs.count(_.getProperty("spark.sql.execution.id") == null)
+
+  test("a resolved version is read without a Spark job, with the same rows") {
+    val dir = Files.createTempDirectory("graft-docstore-memo").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    sink.upsert(Seq(("a", 1L, "x1"), ("b", 1L, "y1")).toDF("k", "ver", "v"), batchId = 0L)
+    val expect = Set(("a", 1L, "x1"), ("b", 1L, "y1"))
+    // a fresh instance (a restarted process) infers the schema once —
+    // the job the counter must be able to see
+    val fresh = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    val (_, missJobs) = jobsDuring(fresh.current(spark))
+    assert(inferenceJobs(missJobs) == 1, "the first read of another instance's version infers")
+    for (s <- Seq(fresh, sink)) { // resolved by a read; seeded by the write
+      val (cur, jobs) = jobsDuring(s.current(spark))
+      assert(jobs.isEmpty, s"current() after the first resolve launched ${jobs.size} job(s)")
+      assert(cur.get.as[(String, Long, String)].collect().toSet == expect)
+    }
+  }
+
+  test("the next upsert's base read launches no schema-inference job") {
+    val batch0 = Seq(("a", 1L, "x1")).toDF("k", "ver", "v")
+    val batch1 = Seq(("b", 1L, "y1")).toDF("k", "ver", "v")
+    val dir = Files.createTempDirectory("graft-docstore-base").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    sink.upsert(batch0, batchId = 0L)
+    val (_, jobs) = jobsDuring(sink.upsert(batch1, batchId = 1L))
+    assert(inferenceJobs(jobs) == 0, "the base v=0 this instance wrote was re-inferred")
+    // the same upsert from a fresh instance pays the one inference
+    val dir2 = Files.createTempDirectory("graft-docstore-base2").toString
+    new ParquetDocStoreSink(dir2, keys = Seq("k"), orderCols = Seq("ver")).upsert(batch0, 0L)
+    val fresh = new ParquetDocStoreSink(dir2, keys = Seq("k"), orderCols = Seq("ver"))
+    val (_, freshJobs) = jobsDuring(fresh.upsert(batch1, batchId = 1L))
+    assert(inferenceJobs(freshJobs) == 1)
+    assert(sink.current(spark).get.as[(String, Long, String)].collect().toSet
+      == fresh.current(spark).get.as[(String, Long, String)].collect().toSet)
+  }
+
+  test("hit, miss and a fresh instance read the same schema, nested fields included") {
+    val dir = Files.createTempDirectory("graft-docstore-schema").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    // Seq(...).toDF: the Long, the struct and the array are non-nullable
+    val batch = Seq(("a", 1L, (2, Seq(3L, 4L))), ("b", 1L, (5, Seq.empty[Long])))
+      .toDF("k", "ver", "v")
+    assert(!batch.schema("ver").nullable)
+    sink.upsert(batch, batchId = 0L)
+    val inferred = spark.read.parquet(s"$dir/v=0").schema
+    val fresh = new ParquetDocStoreSink(dir, keys = Seq("k"), orderCols = Seq("ver"))
+    val miss = fresh.current(spark).get.schema
+    val hitAfterMiss = fresh.current(spark).get.schema
+    val hitAfterWrite = sink.current(spark).get.schema
+    for (s <- Seq(miss, hitAfterMiss, hitAfterWrite))
+      assert(s == inferred, s"${s.treeString} != ${inferred.treeString}")
+    // the base read of the next upsert sees the same schema too
+    sink.upsert(Seq(("c", 1L, (6, Seq(7L)))).toDF("k", "ver", "v"), batchId = 1L)
+    assert(sink.current(spark).get.as[(String, Long, (Int, Seq[Long]))].collect().toSet ==
+      Set(("a", 1L, (2, Seq(3L, 4L))), ("b", 1L, (5, Seq.empty[Long])), ("c", 1L, (6, Seq(7L)))))
+  }
+
+  test("retire() drops the schemas of the versions it deletes") {
+    val dir = Files.createTempDirectory("graft-docstore-memo-ret").toString
+    val sink = new ParquetDocStoreSink(dir, keys = Seq("k"),
+      orderCols = Seq("ver"), keepVersions = 2)
+    def onDisk: Set[Long] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("v="))
+        .map(_.getName.stripPrefix("v=").toLong).toSet
+    for (b <- 0L to 3L) {
+      sink.upsert(Seq((s"k$b", 1L, "x")).toDF("k", "ver", "v"), batchId = b)
+      sink.current(spark)
+      assert(sink.schemas.keySet.asScala.toSet == onDisk, s"after batch $b")
+    }
+    assert(onDisk == Set(2L, 3L))
   }
 
   test("startIngest routes through a swapped-in doc-store sink") {
