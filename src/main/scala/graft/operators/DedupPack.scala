@@ -60,16 +60,12 @@ object DedupPack extends QueryPack {
     (0 until Hashing.NumPerms).map(i =>
       array_min(transform(hs, h => Hashing.permuted(h, i))).as(s"mh$i"))
 
-  /** Process-lifetime memo of the corpus SIGNATURE table (doc_id,
-    * mh0..mh7) — the artifact the band table and the value-banded
-    * pair join both derive from (one tokenize → shingle → md5 →
-    * minhash pass per corpus). */
-  private val sigsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The corpus SIGNATURE table (doc_id, mh0..mh7) — the artifact
+    * the band table and the value-banded pair join both derive from
+    * (one tokenize → shingle → md5 → minhash pass per corpus). */
   private def sigsFor(s: SparkSession, dir: String): DataFrame =
-    sigsMemo.computeIfAbsent(dir,
-      _ => signatures(s, dir).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.sigs|$dir")(
+      signatures(s, dir).localCheckpoint(eager = true))
 
   /** MinHash-LSH candidate pairs (doc_a < doc_b): the shared input of
     * the grouping/apply queries. */
@@ -151,22 +147,12 @@ object DedupPack extends QueryPack {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
-  /** Process-lifetime memo of the LSH candidate-pair set per corpus
-    * dir — the [[SimilarityPack]] knnGraph / [[IndexCache]]
-    * accounting applied to the MinHash-LSH index: in production the
-    * band table is ONE maintained index and every dedup consumer
-    * (pair audit, grouping, apply/keep-best, leakage, verification)
-    * reads it rather than re-banding the corpus. Construction is
-    * deterministic, so the memo is bit-identical to an in-query
-    * build and every oracle replays the same chain regardless of
-    * which consumer triggered it. Bench accounting becomes
-    * first-consumer-pays, like every IndexCache artifact. */
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The LSH candidate-pair set — ONE maintained index that every
+    * dedup consumer (pair audit, grouping, apply/keep-best, leakage,
+    * verification) reads rather than re-banding the corpus. */
   private def pairsFor(s: SparkSession, dir: String): DataFrame =
-    pairsMemo.computeIfAbsent(dir,
-      _ => candidatePairs(s, dir).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.pairs|$dir")(
+      candidatePairs(s, dir).localCheckpoint(eager = true))
 
   /** ...and the min-label dup GROUPS over those pairs — the second
     * artifact of the same index family (groups are what the apply /
@@ -174,56 +160,40 @@ object DedupPack extends QueryPack {
     * the whole iterative components loop). ds_dup_groups_star keeps
     * its own large/small-star build by design: the two algorithms'
     * agreement on (node, rep) is the point of that query. */
-  private val groupsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def groupsFor(s: SparkSession, dir: String): DataFrame =
-    groupsMemo.computeIfAbsent(dir,
-      _ => Components.connectedComponents(pairsFor(s, dir))
+    Artifacts.get(s, s"dedup.groups|$dir")(
+      Components.connectedComponents(pairsFor(s, dir))
         .localCheckpoint(eager = true))
 
-  /** ...and the corpus-level fuzzy blocking index (the same
-    * accounting): ds_fuzzy_pairs and ds_fuzzy_apply consumed two
-    * independent builds of the three blocking passes + verification. */
-  private val fuzzyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** ...and the corpus-level fuzzy blocking index: ds_fuzzy_pairs
+    * and ds_fuzzy_apply share one build of the three blocking passes
+    * + verification. */
   private def fuzzyPairsFor(s: SparkSession, dir: String): DataFrame =
-    fuzzyMemo.computeIfAbsent(dir,
-      _ => fuzzyPairs(Tables.documents(s, dir))
-        .localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.fuzzy|$dir")(
+      fuzzyPairs(Tables.documents(s, dir)).localCheckpoint(eager = true))
 
   /** ...and the span-gram occurrence frame (doc_id, pos, gh) — the
     * shared seed table of the coverage and excision span queries. */
-  private val spanGramsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def spanGramsFor(s: SparkSession, dir: String): DataFrame =
-    spanGramsMemo.computeIfAbsent(dir,
-      _ => spanGrams(tokenized(s, dir)).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.spanGrams|$dir")(
+      spanGrams(tokenized(s, dir)).localCheckpoint(eager = true))
 
   /** ...and the corpus-level distinct hashed-shingle frame — the
     * Jaccard family's shared projection: pairs, novelty, LSH-verify
     * and incremental near-dup each re-ran the tokenize → shingle →
     * md5 chain (novelty twice, through its df self-reference). */
-  private val shinglesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def shinglesFor(s: SparkSession, dir: String): DataFrame =
-    shinglesMemo.computeIfAbsent(dir,
-      _ => hashedShingles(tokenized(s, dir)).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.shingles|$dir")(
+      hashedShingles(tokenized(s, dir)).localCheckpoint(eager = true))
 
   /** ...and the LSH band table itself (doc_id, band, key) — the
     * maintained index underneath [[pairsFor]]: the incremental
     * near-dup probe reads base/delta SLICES of the same table (the
     * delta predicate is a doc_id expression, so a filter over the one
     * artifact replaces two independent signature passes). */
-  private val bandsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def bandsFor(s: SparkSession, dir: String): DataFrame =
-    bandsMemo.computeIfAbsent(dir,
-      _ => bands(s, dir).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.bands|$dir")(
+      bands(s, dir).localCheckpoint(eager = true))
 
   /** (doc_id, band, key) — one row per LSH band (derived from the
     * memoized signature table: one minhash pass per corpus feeds
@@ -1004,17 +974,12 @@ object DedupPack extends QueryPack {
     * hashing + slice assembly at the fixture's ~100-token docs. */
   val CdcDocsPerTask = 256L
 
-  /** The chunk table as a per-dir artifact (the pairsFor accounting):
-    * ds_cdc_chunks consumed it twice (hash histogram + the join back)
-    * and ds_cdc_apply built it a second time from scratch — in
-    * production CDC chunking is the ingest-side pass a store runs
-    * once, and every rollup reads the chunk table. */
-  private val cdcMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** The chunk table: CDC chunking is the ingest-side pass a store
+    * runs once, and every rollup (ds_cdc_chunks' histogram and join
+    * back, ds_cdc_apply) reads it. */
   private def cdcChunkedFor(s: SparkSession, dir: String): DataFrame =
-    cdcMemo.computeIfAbsent(dir,
-      _ => cdcChunked(tokenized(s, dir)).localCheckpoint(eager = true))
+    Artifacts.get(s, s"dedup.cdc|$dir")(
+      cdcChunked(tokenized(s, dir)).localCheckpoint(eager = true))
 
   /** The ds_cdc_chunks body over a (doc_id, toks) frame. */
   def cdcChunks(tokens: DataFrame): DataFrame =

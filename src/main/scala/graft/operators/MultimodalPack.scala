@@ -420,21 +420,11 @@ object MultimodalPack extends QueryPack {
     })
   )
 
-  /** (snd_id, fp) over the near-dup audio fixture. */
-  /** Process-lifetime memos of the decoded fingerprint frames and
-    * their dup pairs/groups per corpus dir — the DedupPack
-    * pairsFor/groupsFor accounting at media grain: five dhash
-    * consumers (hash table, dup pairs, apply, pair curation, recall
-    * probe) and two audio consumers each re-ran the full decode +
-    * perceptual-hash chain (and two re-ran the iterative components
-    * loop). Decode and hashing are deterministic, so each memo is
-    * bit-identical to an in-query build; the oracles replay the
-    * fixture arithmetic regardless of consumer. */
-  private val mediaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+  /** (snd_id, fp) over the near-dup audio fixture — shared by the
+    * two audio consumers, which would each re-run the full decode +
+    * perceptual-hash chain. */
   private def audioFped(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#afp", { _ =>
+    Artifacts.get(s, s"media.audioFp|$dir") {
       implicit val sp: SparkSession = s
       Multimodal.windowEnergies(Multimodal.decodePcm16(
           Multimodal.syntheticNearDupAudio(
@@ -442,23 +432,23 @@ object MultimodalPack extends QueryPack {
         .select(col("snd_id"),
           PerceptualHash.audioFp(col("energies")).as("fp"))
         .localCheckpoint(eager = true)
-    })
+    }
 
   /** (img_id, dhash) over the near-dup image fixture — the shared
-    * head of the perceptual-hash queries, memoized per corpus. */
+    * head of the five perceptual-hash queries. */
   private[graft] def dhashed(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dh",
-      _ => dhashOf(s, Tables.documents(s, dir)).localCheckpoint(eager = true))
+    Artifacts.get(s, s"media.dhash|$dir")(
+      dhashOf(s, Tables.documents(s, dir)).localCheckpoint(eager = true))
 
   /** The image dup-pair index and its components — shared by
     * mm_dhash_dups / mm_dhash_apply / mm_pair_dedup. */
   private def dhashPairsFor(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dhp",
-      _ => dhashDups(dhashed(s, dir)).localCheckpoint(eager = true))
+    Artifacts.get(s, s"media.dhashPairs|$dir")(
+      dhashDups(dhashed(s, dir)).localCheckpoint(eager = true))
 
   private def dhashGroupsFor(s: SparkSession, dir: String): DataFrame =
-    mediaMemo.computeIfAbsent(s"$dir#dhg",
-      _ => Components.connectedComponents(
+    Artifacts.get(s, s"media.dhashGroups|$dir")(
+      Components.connectedComponents(
           dhashPairsFor(s, dir).select(col("img_a"), col("img_b")),
           "img_a", "img_b")
         .localCheckpoint(eager = true))
